@@ -958,12 +958,14 @@ def corpus_zorder(input_parquet: str, output: str, cols: str,
                   num_files: int | None) -> None:
     """Rewrite a parquet table Z-order-clustered on multiple columns so
     footer min/max stats skip files for predicates on ANY of them."""
-    from id3c_spark.sources.bucketing import write_zordered
+    from id3c_spark.sources.store import clustered
 
     spark = get_spark("corpus-zorder")
     df = spark.read.parquet(input_parquet)
-    write_zordered(df, output, [c.strip() for c in cols.split(",")],
-                   num_files=num_files)
+    by = [c.strip() for c in cols.split(",")]
+    clustered(df, zorder_by=by, partitions=num_files).write.mode(
+        "overwrite"
+    ).parquet(output)
     click.echo(json.dumps({"output": output, "cols": cols}))
 
 

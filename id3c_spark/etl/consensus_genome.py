@@ -64,6 +64,16 @@ def match_organism(organisms: DataFrame, token_col):
     return mapping[F.lower(token_col)]
 
 
+def _upsert_read_sets(warehouse: Warehouse, updates: DataFrame) -> DataFrame:
+    """MERGE read sets on (sample_id, urls hash); the hash is derived from
+    the stored urls, never stored itself. Returns the merged table."""
+    keys = [["sample_id", "urls_hash"]]
+    return warehouse._upsert("sequence_read_set", updates, keys, lambda t: merge(
+        t.withColumn("urls_hash", urls_key(F.col("urls"))), updates, keys,
+        "sequence_read_set_id", update_cols=["urls"], details_col=None,
+    ).drop("urls_hash"))
+
+
 def upload_read_sets(
     spark: SparkSession,
     read_sets: DataFrame,
@@ -99,14 +109,7 @@ def upload_read_sets(
     )
     n_known = known.count()
     if n_known:
-        current = warehouse.read("sequence_read_set").withColumn(
-            "urls_hash", urls_key(F.col("urls"))
-        )
-        srs = merge(
-            current, known, [["sample_id", "urls_hash"]],
-            "sequence_read_set_id", update_cols=["urls"], details_col=None,
-        ).df
-        warehouse.publish("sequence_read_set", srs.drop("urls_hash"))
+        _upsert_read_sets(warehouse, known)
     return unknown, {"uploaded": n_known, "unknown": unknown.count()}
 
 
@@ -141,15 +144,9 @@ def run(
         )
         .dropDuplicates(["sample_id", "urls_hash"])
     )
-    current_srs = warehouse.read("sequence_read_set").withColumn(
-        "urls_hash", urls_key(F.col("urls"))
+    srs_keyed = _upsert_read_sets(warehouse, srs_updates).select(
+        "sequence_read_set_id", "sample_id", urls_key(F.col("urls")).alias("urls_hash")
     )
-    srs = merge(
-        current_srs, srs_updates, [["sample_id", "urls_hash"]],
-        "sequence_read_set_id", update_cols=["urls"], details_col=None,
-    ).df
-    warehouse.publish("sequence_read_set", srs.drop("urls_hash"))
-    srs_keyed = srs.select("sequence_read_set_id", "sample_id", "urls_hash")
 
     # consensus genomes: MERGE on (sample, organism, srs)
     genome_updates = (
@@ -167,13 +164,14 @@ def run(
         )
         .dropDuplicates(["sample_id", "organism_id", "sequence_read_set_id"])
     )
-    genomes = merge(
-        warehouse.read("consensus_genome"),
-        genome_updates.drop("masked"),
-        [["sample_id", "organism_id", "sequence_read_set_id"]],
-        "consensus_genome_id", update_cols=[], details_col=None,
-    ).df
-    warehouse.publish("consensus_genome", genomes)
+    genome_keys = [["sample_id", "organism_id", "sequence_read_set_id"]]
+    genome_rows = genome_updates.drop("masked")
+    genomes = warehouse._upsert(
+        "consensus_genome", genome_rows, genome_keys, lambda t: merge(
+            t, genome_rows, genome_keys, "consensus_genome_id",
+            update_cols=[], details_col=None,
+        ),
+    )
 
     # genomic sequences: MERGE on (segment, consensus_genome_id)
     seqs = (
@@ -192,12 +190,11 @@ def run(
         )
         .dropDuplicates(["segment", "consensus_genome_id"])
     )
-    gs = merge(
-        warehouse.read("genomic_sequence"), seqs,
-        [["segment", "consensus_genome_id"]],
-        "genomic_sequence_id", update_cols=["identifier", "seq"], details_col=None,
-    ).df
-    warehouse.publish("genomic_sequence", gs)
+    seq_keys = [["segment", "consensus_genome_id"]]
+    warehouse._upsert("genomic_sequence", seqs, seq_keys, lambda t: merge(
+        t, seqs, seq_keys, "genomic_sequence_id",
+        update_cols=["identifier", "seq"], details_col=None,
+    ))
 
     return {
         "documents": docs.count(),

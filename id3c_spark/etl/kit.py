@@ -112,11 +112,9 @@ def run_enrollments(
 
     n_kits = kit_updates.count()
     if n_kits:
-        merged = merge(
-            warehouse.read("kit"), kit_updates, [["identifier"]], "kit_id",
-            update_cols=["encounter_id"],
-        )
-        warehouse.publish("kit", merged.df)
+        warehouse._upsert("kit", kit_updates, [["identifier"]], lambda t: merge(
+            t, kit_updates, [["identifier"]], "kit_id", update_cols=["encounter_id"],
+        ))
         _update_kit_samples(warehouse)
 
     return KitRunResult(
@@ -251,11 +249,10 @@ def run_manifests(
     )
     n_kits = kit_updates.count()
     if n_kits:
-        merged = merge(
-            warehouse.read("kit"), kit_updates, [["identifier"]], "kit_id",
+        warehouse._upsert("kit", kit_updates, [["identifier"]], lambda t: merge(
+            t, kit_updates, [["identifier"]], "kit_id",
             update_cols=["rdt_sample_id", "utm_sample_id"],
-        )
-        warehouse.publish("kit", merged.df)
+        ))
         _update_kit_samples(warehouse)
 
     return KitRunResult(
@@ -310,11 +307,10 @@ def run(
         )
         .dropDuplicates(["identifier"])
     )
-    merged = merge(
-        warehouse.read("kit"), kit_updates, [["identifier"]], "kit_id",
+    warehouse._upsert("kit", kit_updates, [["identifier"]], lambda t: merge(
+        t, kit_updates, [["identifier"]], "kit_id",
         update_cols=["encounter_id", "rdt_sample_id", "utm_sample_id"], details_col=None,
-    )
-    warehouse.publish("kit", merged.df)
+    ))
 
     return KitRunResult(
         stats={

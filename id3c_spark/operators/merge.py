@@ -26,7 +26,6 @@ The parquet copy-on-write in sources/store.py is the local stand-in.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -38,25 +37,6 @@ from id3c_spark.functions.json_ops import json_merge_udf
 class MultipleMatchError(RuntimeError):
     """An update row matched more than one existing row — the reference
     raises the same way rather than guessing (db/__init__.py:316-318)."""
-
-
-@dataclass
-class MergeResult:
-    """Lazy merge outcome: ``df`` is the merged table plan; the component
-    frames let callers compute write-amplification stats on demand without
-    forcing actions during plan construction."""
-
-    df: DataFrame
-    updated_df: DataFrame | None = None
-    inserted_df: DataFrame | None = None
-    unchanged_df: DataFrame | None = None
-
-    def stats(self) -> dict[str, int]:
-        return {
-            "updated": self.updated_df.count() if self.updated_df is not None else 0,
-            "inserted": self.inserted_df.count() if self.inserted_df is not None else 0,
-            "unchanged": self.unchanged_df.count() if self.unchanged_df is not None else 0,
-        }
 
 
 def _null_safe_changed(
@@ -93,7 +73,7 @@ def merge(
     error_on_multi: bool = True,
     update_keys: bool = True,
     single_pass: bool | None = None,
-) -> MergeResult:
+) -> DataFrame:
     """Upsert ``updates`` into ``target``; returns the merged DataFrame.
 
     key_cols: one key, or a list of alternate keys tried in order (rows
@@ -128,7 +108,7 @@ def merge(
         # upsert_sample's update_identifiers semantics (db/__init__.py:
         # 182-326): a row matched via one alternate key takes the update's
         # value for the OTHER key columns too (null update values keep the
-        # target's — coalesce below). find_or_create passes update_keys=False.
+        # target's — coalesce below). find_or_create_* passes update_keys=False.
         for c in dict.fromkeys(sum(alt_keys, [])):
             if c in updates.columns and c != id_col and c not in update_cols:
                 update_cols.append(c)
@@ -281,27 +261,7 @@ def merge(
                 .alias(c)
             )
 
-        merged = j.filter(emit).select(*[pick(c) for c in target.columns])
-        t_cols = [F.col(f"t_{c}").alias(c) for c in target.columns]
-        return MergeResult(
-            df=merged,
-            updated_df=j.filter(is_matched & changed).select(
-                *[
-                    (
-                        F.coalesce(F.col(f"u_{c}"), F.col(f"t_{c}"))
-                        if c in update_cols and c != id_col
-                        else F.col(f"t_{c}")
-                    ).alias(c)
-                    for c in target.columns
-                ]
-            ),
-            inserted_df=j.filter(is_insert).select(
-                *[ins_col(c).alias(c) for c in target.columns]
-            ),
-            unchanged_df=j.filter(
-                is_matched & ~changed & (n_changed == 0) & (rn == 1)
-            ).select(*t_cols),
-        )
+        return j.filter(emit).select(*[pick(c) for c in target.columns])
 
     def out_cols(merged_details: Column | None) -> list[Column]:
         cols = []
@@ -368,26 +328,8 @@ def merge(
             insert_cols.append(F.lit(None).cast(dict(target.dtypes)[c]).alias(c))
     inserts = residue.select(*insert_cols)
 
-    merged = (
+    return (
         untouched.unionByName(unchanged_matched)
         .unionByName(updated_rows)
         .unionByName(inserts)
-    )
-    return MergeResult(
-        df=merged, updated_df=updated_rows, inserted_df=inserts,
-        unchanged_df=unchanged_matched,
-    )
-
-
-def find_or_create(
-    target: DataFrame,
-    wanted: DataFrame,
-    key_cols: Sequence[str],
-    id_col: str,
-) -> MergeResult:
-    """``find_or_create_*`` parity (etl/__init__.py:33-63): insert missing
-    keys, never update existing rows — a MERGE with whenNotMatched only."""
-    return merge(
-        target, wanted, [list(key_cols)], id_col,
-        update_cols=[], details_col=None, error_on_multi=False, update_keys=False,
     )

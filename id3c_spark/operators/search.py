@@ -16,13 +16,18 @@ Scale shape (100 TB):
   - Corpus stats (N, avgdl) join in via a broadcast single-row frame,
     never a driver collect.
 
-Determinism for the DuckDB oracle: per-term scores are rounded to 8 dp
-and summed as DECIMAL (exact, order-independent), the final score
-rounded to 6 dp before ranking with doc-id tiebreak — both engines agree
-bit-for-bit (see plans/queries.py discipline note).
+Determinism for the DuckDB oracle: tf·(k1+1) is an exact decimal
+product, per-term scores are rounded to 8 dp and summed as DECIMAL
+(exact, order-independent), and the final score is rounded to 6 dp the
+way DuckDB rounds a double — round(x·10⁶)/10⁶ on the binary value, so a
+sum such as 2.0716205 (stored just below the half) rounds down — before
+ranking with doc-id tiebreak: both engines agree bit-for-bit (see
+plans/queries.py discipline note).
 """
 
 from __future__ import annotations
+
+from decimal import Decimal
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -155,7 +160,7 @@ def bm25_topk(
             "term_score",
             F.round(
                 F.col("idf")
-                * (F.col("tf") * (k1 + 1))
+                * (F.col("tf") * F.lit(Decimal(repr(k1 + 1)))).cast("double")
                 / (
                     F.col("tf")
                     + k1 * (1 - b + b * F.col("dl") / F.col("avgdl_raw"))
@@ -165,7 +170,7 @@ def bm25_topk(
         )
     )
     by_doc = scored.groupBy("id").agg(
-        F.round(F.sum("term_score").cast("double"), 6).alias("score"),
+        (F.round(F.sum("term_score").cast("double") * 1e6) / 1e6).alias("score"),
         F.count("*").alias("n_terms_matched"),
     )
     # orderBy+limit compiles to TakeOrderedAndProject (per-partition heaps,

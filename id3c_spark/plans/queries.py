@@ -551,11 +551,10 @@ def merge_upsert_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("o_totalprice") * 2, 2).alias("o_totalprice"),
     )
     updates = corrections.unionByName(new_orders)
-    result = merge_op.merge(
+    return merge_op.merge(
         orders, updates, ["o_orderkey"], id_col="o_orderkey",
         update_cols=["o_totalprice"], details_col=None, error_on_multi=False,
     )
-    return result.df
 
 
 # ---------------------------------------------------------------------------

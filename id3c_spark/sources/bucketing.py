@@ -1,4 +1,4 @@
-"""Bucketed table layout — shuffle-free co-located joins and aggregations.
+"""Bucketed and directory-partitioned table layouts, plus plan evidence.
 
 At 100 TB the dominant cost of a repeated fact-to-fact join (orders x
 lineitem, encounter x sample, corpus x signatures) is re-shuffling both
@@ -11,6 +11,11 @@ amortized over every downstream query. This is the warehouse-layout
 counterpart of ``corpus.shuffle_shards`` (which orders training output;
 this co-locates join keys).
 
+Range and Z-order clustering for footer-statistics skipping is not here:
+it is the copy-on-write store's one layout routine,
+:func:`id3c_spark.sources.store.clustered`, with footer statistics read
+by :func:`id3c_spark.sources.store.footer_range`.
+
 Notes for real clusters (all apply unchanged on local[n]):
   - both sides must be bucketed on the join key with the SAME bucket
     count (or a divisor, with ``spark.sql.bucketing.coalesceBucketsInJoin``);
@@ -21,7 +26,6 @@ Notes for real clusters (all apply unchanged on local[n]):
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 def write_bucketed(
@@ -101,90 +105,3 @@ def scan_pruning_evidence(df: DataFrame) -> tuple[str, str]:
         return m.group(1) if m else ""
 
     return seg("PartitionFilters"), seg("PushedFilters")
-
-
-def write_range_clustered(
-    df: DataFrame,
-    path: str,
-    cluster_cols: list[str],
-    num_files: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Range-clustered sorted parquet layout: ``repartitionByRange`` on
-    *cluster_cols* then sort within partitions, so each output file's
-    footer min/max statistics on those columns cover a DISJOINT slice of
-    the key space. Parquet predicate pushdown then skips whole files and
-    row groups whose stats exclude the predicate — the single-dimension
-    form of Delta's OPTIMIZE ZORDER, with no table format required.
-    Partitioning prunes low-cardinality dirs, bucketing co-locates join
-    keys; range clustering is the third layout tool, for selective range
-    scans over high-cardinality keys (timestamps, ids, scores)."""
-    parts = [F.col(c) for c in cluster_cols]
-    rp = (
-        df.repartitionByRange(num_files, *parts)
-        if num_files
-        else df.repartitionByRange(*parts)
-    )
-    rp.sortWithinPartitions(*cluster_cols).write.mode(mode).parquet(path)
-
-
-def file_column_ranges(path: str, column: str) -> list[tuple]:
-    """Per-file (min, max) footer statistics for *column* — the evidence
-    that a layout actually clusters: range-clustered files are pairwise
-    disjoint, unclustered files all span the full domain."""
-    import glob as _glob
-
-    import pyarrow.parquet as pq
-
-    out = []
-    for fname in sorted(_glob.glob(f"{path}/*.parquet")):
-        md = pq.ParquetFile(fname).metadata
-        idx = md.schema.names.index(column)
-        mins, maxs = [], []
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx).statistics
-            if st is not None and st.has_min_max:
-                mins.append(st.min)
-                maxs.append(st.max)
-        if mins:
-            out.append((min(mins), max(maxs)))
-    return out
-
-
-def zorder_key(
-    df: DataFrame, cols: list[str], bits: int = 8
-) -> "Column":
-    """Interleaved-bit (Morton) key over numeric *cols*.
-
-    Delegates to the canonical NULL-safe implementation in
-    :func:`id3c_spark.sources.store.zorder_key_expr` (NULLs and
-    degenerate constant/empty columns map to bucket 0 instead of
-    poisoning the key). Sorting by this key gives the multi-dimensional
-    locality range-clustering can't: each output file covers a small
-    HYPER-RECTANGLE of the key space, so footer min/max stats skip
-    files for predicates on ANY of the clustered columns, not just the
-    leading one."""
-    from .store import zorder_key_expr
-
-    return zorder_key_expr(df, cols, bits)
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    num_files: int | None = None,
-    bits: int = 8,
-    mode: str = "overwrite",
-) -> None:
-    """Z-order clustered parquet: range-partition + sort on the Morton
-    key of *cols* — Delta's OPTIMIZE ZORDER without a table format.
-    Use over write_range_clustered when selective predicates hit more
-    than one high-cardinality column."""
-    keyed = df.withColumn("__z", zorder_key(df, cols, bits))
-    rp = (
-        keyed.repartitionByRange(num_files, "__z")
-        if num_files
-        else keyed.repartitionByRange("__z")
-    )
-    rp.sortWithinPartitions("__z").drop("__z").write.mode(mode).parquet(path)

@@ -1,4 +1,4 @@
-"""Copy-on-write parquet table store.
+"""Copy-on-write parquet table store — the warehouse's one write path.
 
 Local stand-in for a transactional table format: Delta/Iceberg jars are
 not in this image (see pyspark guide), so writes go to a new versioned
@@ -7,12 +7,26 @@ see a partial write, and failed jobs leave the previous version intact
 (the reference's "commit nothing on hard error" transaction guarantee,
 SURVEY §7.3 item 5, via shadow-write-then-publish).
 
+Each write-path decision is made once, here:
+
+- **file statistics** — :func:`footer_range` is the one parquet footer
+  reader and :func:`overlapping_files` the one test of which files a key
+  batch or predicate may touch (merge_publish, pruned_files,
+  pruned_files_in);
+- **layout** — :func:`clustered` range-clusters rows on columns or on a
+  Morton key (publish, stage, merge_publish, compact_incremental, and the
+  ``corpus zorder`` CLI for plain parquet directories);
+- **commit** — ``ParquetTable._commit`` writes a version, hard-links the
+  carried files into it and flips the pointer (merge_publish, append,
+  compact_incremental, publish).
+
 On a real cluster, swap ParquetTable for Delta and operators/merge.py
 feeds MERGE INTO unchanged.
 """
 
 from __future__ import annotations
 
+import bisect
 import glob
 import os
 import shutil
@@ -92,6 +106,97 @@ def with_zorder_key(
     return df.withColumn(key_col, zorder_key_expr(df, cols, bits))
 
 
+# Distinct batch keys a merge collects for exact per-value pruning; past
+# this many, pruning falls back to the batch's key range.
+MERGE_KEY_CAP = 100_000
+
+
+def clustered(
+    df: DataFrame,
+    cluster_by: Sequence[str] | None = None,
+    zorder_by: Sequence[str] | None = None,
+    partitions: int | None = None,
+) -> DataFrame:
+    """The write layout: range-partition + sort on the *cluster_by*
+    columns, or on a Morton key over *zorder_by* (dropped before the
+    write — it is a layout device, not data), so each output file's
+    footer min/max covers a narrow slice of the key space and
+    :func:`overlapping_files` skips the rest. *partitions* pins the file
+    count (an explicit repartition count opts out of AQE's partition
+    coalescing, which would otherwise fold a small table into one file
+    and defeat layout tests / incremental compaction targets); None
+    sizes by spark.sql.shuffle.partitions + AQE."""
+    if zorder_by:
+        df, keys = with_zorder_key(df, zorder_by), ["_zkey"]
+    elif cluster_by:
+        keys = list(cluster_by)
+    elif partitions:  # honor an explicit file count even unclustered
+        return df.repartition(partitions)
+    else:
+        return df
+    args = ([partitions] if partitions else []) + [F.col(c) for c in keys]
+    out = df.repartitionByRange(*args).sortWithinPartitions(*keys)
+    return out.drop("_zkey") if zorder_by else out
+
+
+def footer_range(fname: str, column: str) -> tuple | None:
+    """(min, max) footer statistics for *column* across a parquet file's
+    row groups, or None when the column or any row group's stats are
+    absent (such a file can never be proven skippable). Truncated string
+    stats are safe: parquet truncation keeps min a lower bound and max an
+    upper."""
+    import pyarrow.parquet as pq
+
+    md = pq.ParquetFile(fname).metadata
+    if column not in md.schema.names:
+        return None
+    idx = md.schema.names.index(column)
+    mins, maxs = [], []
+    for rg in range(md.num_row_groups):
+        st = md.row_group(rg).column(idx).statistics
+        if st is None or not st.has_min_max:
+            return None
+        mins.append(st.min)
+        maxs.append(st.max)
+    if not mins:
+        return None
+    return (min(mins), max(maxs))
+
+
+def _admits(rng: tuple | None, bound: list | tuple) -> bool:
+    """Whether a file whose footer range is *rng* may hold a row matching
+    *bound*: a sorted list of values, or a (lo, hi) pair with None for an
+    unbounded side. Missing or incomparable stats admit (stay safe)."""
+    if rng is None:
+        return True
+    try:
+        if isinstance(bound, list):
+            i = bisect.bisect_left(bound, rng[0])
+            return i < len(bound) and bound[i] <= rng[1]
+        lo, hi = bound
+        return not (
+            (hi is not None and rng[0] > hi) or (lo is not None and rng[1] < lo)
+        )
+    except TypeError:
+        return True
+
+
+def overlapping_files(
+    files: Sequence[str],
+    bounds: dict[str, list | tuple],
+    match: Callable = all,
+) -> list[str]:
+    """The *files* whose footer statistics may hold a matching row: per
+    column, *bounds* gives a sorted value list (point set) or a (lo, hi)
+    range; *match* combines the columns — ``all`` for a conjunctive
+    predicate, ``any`` for alternate merge keys. Extra files are correct,
+    missed ones are not, so a file is dropped only on proof."""
+    return [
+        f for f in files
+        if match(_admits(footer_range(f, c), b) for c, b in bounds.items())
+    ]
+
+
 class ParquetTable:
     def __init__(self, spark: SparkSession, path: str, keep_versions: int = 2):
         """*keep_versions* controls vacuum retention: raise it (or pass a
@@ -147,28 +252,11 @@ class ParquetTable:
             return []
         return sorted(glob.glob(os.path.join(self.path, f"v{v}", "*.parquet")))
 
-    @staticmethod
-    def _footer_range(fname: str, column: str) -> tuple | None:
-        """(min, max) footer statistics for *column* across a file's row
-        groups, or None when stats are absent (then the file must be
-        treated as a rewrite candidate). Truncated string stats are safe:
-        parquet truncation keeps min a lower bound and max an upper."""
-        import pyarrow.parquet as pq
-
-        md = pq.ParquetFile(fname).metadata
-        if column not in md.schema.names:
-            return None
-        idx = md.schema.names.index(column)
-        mins, maxs = [], []
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx).statistics
-            if st is None or not st.has_min_max:
-                return None
-            mins.append(st.min)
-            maxs.append(st.max)
-        if not mins:
-            return None
-        return (min(mins), max(maxs))
+    def _read_files(self, files: Sequence[str], schema) -> DataFrame:
+        """Rows of *files* read with *schema*, or an empty frame of it."""
+        if not files:
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).parquet(*files)
 
     def merge_publish(
         self,
@@ -179,7 +267,7 @@ class ParquetTable:
         zorder_by: Sequence[str] | None = None,
     ) -> int:
         """File-granular copy-on-write MERGE: rewrite ONLY the files whose
-        footer min/max key ranges overlap the update batch's key range;
+        footer statistics may hold one of the update batch's keys;
         hard-link every other file unchanged into the new version.
 
         This is the scale fix for the §2.9 write path (reference
@@ -190,13 +278,17 @@ class ParquetTable:
         *key_cols* mirrors operators.merge.merge's alternate-key shape; the
         first column of each alternate key drives pruning (conservative —
         extra candidates are correct, missed ones are not, and footer
-        non-overlap proves no row in the file can match).
+        non-overlap proves no row in the file can match). A batch's
+        distinct keys prune per value up to MERGE_KEY_CAP of them (a
+        min/max range dies the moment one insert key sits past the
+        table's range, stretching it over every file); past the cap they
+        prune by the batch's key range.
         *merge_fn* receives the candidate-file rows (never the whole table)
         and returns the merged replacement for exactly those rows plus any
         inserts — operators.merge.merge over the candidates is exact because
         matches can only live in candidate files.
-        *cluster_by*: range-cluster + sort the rewritten files on these
-        columns so footer ranges stay tight for the NEXT merge.
+        *cluster_by*/*zorder_by*: the :func:`clustered` layout of the
+        rewritten files, so footer ranges stay tight for the NEXT merge.
         """
         if not self.exists():
             raise FileNotFoundError(
@@ -213,76 +305,26 @@ class ParquetTable:
         )
         schema = self.read().schema
         files = self.files()
-        candidates, carried = list(files), []
+        candidates = files
         if prune_cols:
-            # Exact per-value pruning when the batch's distinct keys fit a
-            # bounded driver sample (the common ETL-batch ≪ table case —
-            # min/max-range-only pruning dies the moment one insert key
-            # sits past the table's range, stretching the batch range over
-            # every file). Past the cap, fall back to range overlap.
-            import bisect
-
-            cap = 100_000
-            per_col: dict[str, object] = {}
+            bounds: dict[str, list | tuple] = {}
             for c in prune_cols:
-                vals = [
+                keys = [
                     r[0]
                     for r in updates.select(c)
                     .filter(F.col(c).isNotNull())
                     .distinct()
-                    .limit(cap + 1)
+                    .limit(MERGE_KEY_CAP + 1)
                     .collect()
                 ]
-                if len(vals) > cap:
-                    lo_hi = updates.agg(F.min(c), F.max(c)).collect()[0]
-                    per_col[c] = ("range", lo_hi[0], lo_hi[1])
-                else:
-                    per_col[c] = ("values", sorted(vals))
-            candidates, carried = [], []
-            for fname in files:
-                overlap = False
-                for c in prune_cols:
-                    spec = per_col[c]
-                    if spec[0] == "values" and not spec[1]:
-                        continue  # no non-null update keys for this column
-                    rng = self._footer_range(fname, c)
-                    if rng is None:
-                        overlap = True
-                        break
-                    try:
-                        if spec[0] == "values":
-                            vals = spec[1]
-                            i = bisect.bisect_left(vals, rng[0])
-                            if i < len(vals) and vals[i] <= rng[1]:
-                                overlap = True
-                                break
-                        else:
-                            _, lo, hi = spec
-                            if lo is not None and not (hi < rng[0] or lo > rng[1]):
-                                overlap = True
-                                break
-                    except TypeError:  # incomparable stats type: stay safe
-                        overlap = True
-                        break
-                (candidates if overlap else carried).append(fname)
-        if candidates:
-            target = self.spark.read.schema(schema).parquet(*candidates)
-        else:
-            target = self.spark.createDataFrame([], schema)
-        merged = merge_fn(target)
-
-        v = (self.current_version() or 0) + 1
-        out = os.path.join(self.path, f"v{v}")
-        merged = self._clustered(merged, cluster_by, zorder_by)
-        merged.write.mode("overwrite").parquet(out)
-        for fname in carried:
-            dst = os.path.join(out, os.path.basename(fname))
-            try:
-                os.link(fname, dst)  # zero-copy carry-forward
-            except OSError:
-                shutil.copy2(fname, dst)
-        self.flip(v)
-        return v
+                if len(keys) > MERGE_KEY_CAP:
+                    bounds[c] = tuple(updates.agg(F.min(c), F.max(c)).collect()[0])
+                elif keys:  # a column with no non-null keys matches nothing
+                    bounds[c] = sorted(keys)
+            candidates = overlapping_files(files, bounds, match=any)
+        carried = sorted(set(files) - set(candidates))
+        merged = merge_fn(self._read_files(candidates, schema))
+        return self._commit(clustered(merged, cluster_by, zorder_by), carried)
 
     def pruned_files(
         self,
@@ -292,24 +334,9 @@ class ParquetTable:
         """The files a read_pruned(*ranges*) would open: footer min/max
         proven to overlap every [lo, hi] bound (None = unbounded), plus
         any file lacking usable stats (never prove-skip without proof)."""
-        keep = []
-        for fname in self.files(version):
-            ok = True
-            for c, (lo, hi) in ranges.items():
-                rng = self._footer_range(fname, c)
-                if rng is None:
-                    continue  # no stats: cannot prove non-overlap
-                try:
-                    if (hi is not None and rng[0] > hi) or (
-                        lo is not None and rng[1] < lo
-                    ):
-                        ok = False
-                        break
-                except TypeError:  # incomparable stats type: stay safe
-                    continue
-            if ok:
-                keep.append(fname)
-        return keep
+        return overlapping_files(
+            self.files(version), {c: tuple(b) for c, b in ranges.items()}
+        )
 
     def pruned_files_in(
         self,
@@ -322,19 +349,9 @@ class ParquetTable:
         must never drop rows). The IN-list analogue of pruned_files: on a
         table clustered by *column*, a scattered probe set (e.g. an ANN
         query's nprobe cells) touches only its cells' files."""
-        vals = sorted(set(values))
-        keep = []
-        for fname in self.files(version):
-            rng = self._footer_range(fname, column)
-            if rng is None:
-                keep.append(fname)
-                continue
-            try:
-                if any(rng[0] <= v <= rng[1] for v in vals):
-                    keep.append(fname)
-            except TypeError:
-                keep.append(fname)
-        return keep
+        return overlapping_files(
+            self.files(version), {column: sorted(set(values))}
+        )
 
     def read_pruned_in(
         self,
@@ -347,12 +364,9 @@ class ParquetTable:
         top."""
         schema = self.read(version).schema
         keep = self.pruned_files_in(column, values, version)
-        df = (
-            self.spark.read.schema(schema).parquet(*keep)
-            if keep
-            else self.spark.createDataFrame([], schema)
+        return self._read_files(keep, schema).filter(
+            F.col(column).isin(list(values))
         )
-        return df.filter(F.col(column).isin(list(values)))
 
     def read_pruned(
         self,
@@ -367,12 +381,7 @@ class ParquetTable:
         files of a 100 TB table instead of scanning it. Files without
         usable stats are read (skipping must never drop rows)."""
         schema = self.read(version).schema
-        keep = self.pruned_files(ranges, version)
-        df = (
-            self.spark.read.schema(schema).parquet(*keep)
-            if keep
-            else self.spark.createDataFrame([], schema)
-        )
+        df = self._read_files(self.pruned_files(ranges, version), schema)
         for c, (lo, hi) in ranges.items():
             if lo is not None:
                 df = df.filter(F.col(c) >= lo)
@@ -380,36 +389,27 @@ class ParquetTable:
                 df = df.filter(F.col(c) <= hi)
         return df
 
-    @staticmethod
-    def _clustered(
-        df: DataFrame,
-        cluster_by: Sequence[str] | None,
-        zorder_by: Sequence[str] | None,
-        partitions: int | None = None,
-    ) -> DataFrame:
-        """Apply the write layout: range-partition + sort on the cluster
-        columns, or on a Morton key over *zorder_by* (dropped before the
-        write — it is a layout device, not data). *partitions* pins the
-        file count (an explicit repartition count opts out of AQE's
-        partition coalescing, which would otherwise fold a small table
-        into one file and defeat layout tests / incremental compaction
-        targets); None sizes by spark.sql.shuffle.partitions + AQE."""
-        if zorder_by:
-            df = with_zorder_key(df, zorder_by)
-            args = ([partitions] if partitions else []) + [F.col("_zkey")]
-            return (
-                df.repartitionByRange(*args)
-                .sortWithinPartitions("_zkey")
-                .drop("_zkey")
-            )
-        if cluster_by:
-            args = ([partitions] if partitions else []) + [
-                F.col(c) for c in cluster_by
-            ]
-            return df.repartitionByRange(*args).sortWithinPartitions(*cluster_by)
-        if partitions:  # honor an explicit file count even unclustered
-            return df.repartition(partitions)
-        return df
+    def _write_version(self, df: DataFrame, carried: Sequence[str] = ()) -> int:
+        """Write *df* as the next version directory and hard-link each
+        *carried* file of the current version into it (zero-copy carry
+        forward; a copy where links are unsupported). Not yet visible."""
+        v = (self.current_version() or 0) + 1
+        out = os.path.join(self.path, f"v{v}")
+        df.write.mode("overwrite").parquet(out)
+        for fname in carried:
+            dst = os.path.join(out, os.path.basename(fname))
+            try:
+                os.link(fname, dst)
+            except OSError:
+                shutil.copy2(fname, dst)
+        return v
+
+    def _commit(self, df: DataFrame, carried: Sequence[str] = ()) -> int:
+        """The one commit: stage *df* plus the *carried* files as the
+        next version, then flip readers to it."""
+        v = self._write_version(df, carried)
+        self.flip(v)
+        return v
 
     def stage(
         self,
@@ -423,14 +423,11 @@ class ParquetTable:
         staging leaves only an unreferenced directory behind. Lets a
         multi-table promotion do all its expensive writes first and flip
         every pointer in one quick final pass. *cluster_by*/*zorder_by*
-        pick the file layout (tight footer ranges → read_pruned and
-        merge_publish skip files)."""
-        v = (self.current_version() or 0) + 1
-        out = os.path.join(self.path, f"v{v}")
-        self._clustered(df, cluster_by, zorder_by, partitions).write.mode(
-            "overwrite"
-        ).parquet(out)
-        return v
+        pick the :func:`clustered` file layout (tight footer ranges →
+        read_pruned and merge_publish skip files)."""
+        return self._write_version(
+            clustered(df, cluster_by, zorder_by, partitions)
+        )
 
     def flip(self, v: int) -> None:
         """Atomically point readers at a previously staged version."""
@@ -448,10 +445,7 @@ class ParquetTable:
         partitions: int | None = None,
     ) -> int:
         """Write a new version, then flip the pointer (atomic rename)."""
-        v = self.stage(df, cluster_by=cluster_by, zorder_by=zorder_by,
-                       partitions=partitions)
-        self.flip(v)
-        return v
+        return self._commit(clustered(df, cluster_by, zorder_by, partitions))
 
     def append(self, df: DataFrame, evolve: bool = False) -> int:
         """Append rows as a new version. With *evolve*, either side may
@@ -486,17 +480,7 @@ class ParquetTable:
             return self.publish(
                 self.read().unionByName(df, allowMissingColumns=evolve)
             )
-        v = (self.current_version() or 0) + 1
-        out = os.path.join(self.path, f"v{v}")
-        df.write.mode("overwrite").parquet(out)
-        for fname in self.files():
-            dst = os.path.join(out, os.path.basename(fname))
-            try:
-                os.link(fname, dst)  # zero-copy carry-forward
-            except OSError:
-                shutil.copy2(fname, dst)
-        self.flip(v)
-        return v
+        return self._commit(df, self.files())
 
     def compact(self, target_files: int) -> int:
         """Rewrite the current version into *target_files* files (small-
@@ -536,24 +520,13 @@ class ParquetTable:
             return self.current_version() or 0
         large = [f for f in self.files() if f not in set(small)]
         bins = max(1, sum(os.path.getsize(f) for f in small) // min_file_bytes + 1)
-        schema = self.read().schema
-        packed = self.spark.read.schema(schema).parquet(*small)
+        packed = self._read_files(small, self.read().schema)
         packed = (
-            self._clustered(packed, cluster_by, zorder_by, int(bins))
+            clustered(packed, cluster_by, zorder_by, int(bins))
             if (cluster_by or zorder_by)
             else packed.coalesce(int(bins))
         )
-        v = (self.current_version() or 0) + 1
-        out = os.path.join(self.path, f"v{v}")
-        packed.write.mode("overwrite").parquet(out)
-        for fname in large:
-            dst = os.path.join(out, os.path.basename(fname))
-            try:
-                os.link(fname, dst)
-            except OSError:
-                shutil.copy2(fname, dst)
-        self.flip(v)
-        return v
+        return self._commit(packed, large)
 
     def changes(self, v_from: int, v_to: int | None = None) -> DataFrame:
         """Row-level change feed between two versions (the CDC read
@@ -573,16 +546,14 @@ class ParquetTable:
         f_old = {os.path.basename(f): f for f in self.files(v_from)}
         f_new = {os.path.basename(f): f for f in self.files(v_to)}
         schema = self.read(v_to).schema
-        old_only = [f for b, f in f_old.items() if b not in f_new]
-        new_only = [f for b, f in f_new.items() if b not in f_old]
-
-        def part(files: list[str]) -> DataFrame:
-            if not files:
-                return self.spark.createDataFrame([], schema)
-            return self.spark.read.schema(schema).parquet(*files)
-
-        added = part(new_only).exceptAll(part(old_only))
-        removed = part(old_only).exceptAll(part(new_only))
+        old_only = self._read_files(
+            [f for b, f in f_old.items() if b not in f_new], schema
+        )
+        new_only = self._read_files(
+            [f for b, f in f_new.items() if b not in f_old], schema
+        )
+        added = new_only.exceptAll(old_only)
+        removed = old_only.exceptAll(new_only)
         return added.withColumn("_change_type", F.lit("insert")).unionByName(
             removed.withColumn("_change_type", F.lit("delete"))
         )

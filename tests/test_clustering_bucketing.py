@@ -258,15 +258,26 @@ def test_salted_join_and_count_equal_unsalted(spark):
     assert counts[7] == 900 and len(counts) == 101
 
 
+def _file_column_ranges(path: str, column: str) -> list[tuple]:
+    """Per-file footer (min, max) of *column* — the evidence that a
+    layout actually clusters."""
+    import glob
+
+    from id3c_spark.sources.store import footer_range
+
+    ranges = [footer_range(f, column) for f in sorted(glob.glob(f"{path}/*.parquet"))]
+    return [r for r in ranges if r is not None]
+
+
 def test_range_clustered_files_are_disjoint(spark, tmp_path):
-    from id3c_spark.sources.bucketing import file_column_ranges, write_range_clustered
+    from id3c_spark.sources.store import clustered
 
     df = spark.range(0, 10000).select(
         F.col("id").alias("ts"), (F.col("id") % 97).alias("v")
     )
-    clustered = str(tmp_path / "clustered")
-    write_range_clustered(df, clustered, ["ts"], num_files=8)
-    ranges = sorted(file_column_ranges(clustered, "ts"))
+    out = str(tmp_path / "clustered")
+    clustered(df, ["ts"], partitions=8).write.parquet(out)
+    ranges = sorted(_file_column_ranges(out, "ts"))
     assert len(ranges) >= 4
     # pairwise disjoint: each file owns a slice of the ts domain, so a
     # ts-range predicate skips every other file via footer stats
@@ -277,7 +288,7 @@ def test_range_clustered_files_are_disjoint(spark, tmp_path):
     # file — no stats-based skipping possible
     plain = str(tmp_path / "plain")
     df.repartition(8).write.parquet(plain)
-    pranges = file_column_ranges(plain, "ts")
+    pranges = _file_column_ranges(plain, "ts")
     overlapping = sum(
         1 for (lo1, hi1) in pranges for (lo2, hi2) in pranges
         if (lo1, hi1) != (lo2, hi2) and lo1 <= hi2 and lo2 <= hi1
@@ -286,7 +297,7 @@ def test_range_clustered_files_are_disjoint(spark, tmp_path):
 
 
 def test_zordered_files_have_narrow_spans_on_both_columns(spark, tmp_path):
-    from id3c_spark.sources.bucketing import file_column_ranges, write_zordered
+    from id3c_spark.sources.store import clustered
 
     # two independent uniform dimensions — hash layout gives every file
     # the full domain on both; z-order confines each file to a small
@@ -296,10 +307,10 @@ def test_zordered_files_have_narrow_spans_on_both_columns(spark, tmp_path):
         ((F.col("id") * 2654435761) % 128).alias("y"),
     )
     zpath = str(tmp_path / "zordered")
-    write_zordered(df, zpath, ["x", "y"], num_files=16)
+    clustered(df, zorder_by=["x", "y"], partitions=16).write.parquet(zpath)
 
     def avg_span(path, col):
-        rng = file_column_ranges(path, col)
+        rng = _file_column_ranges(path, col)
         return sum(hi - lo for lo, hi in rng) / len(rng)
 
     plain = str(tmp_path / "plain")
@@ -312,10 +323,10 @@ def test_zordered_files_have_narrow_spans_on_both_columns(spark, tmp_path):
 
 
 def test_zorder_key_constant_column_degenerates_gracefully(spark):
-    from id3c_spark.sources.bucketing import zorder_key
+    from id3c_spark.sources.store import zorder_key_expr
 
     df = spark.range(0, 100).select(F.col("id").alias("a"), F.lit(7).alias("b"))
-    keys = df.select(zorder_key(df, ["a", "b"]).alias("z")).distinct().count()
+    keys = df.select(zorder_key_expr(df, ["a", "b"], bits=8).alias("z")).distinct().count()
     assert keys > 50  # the varying column still spreads the key space
 
 

@@ -172,6 +172,92 @@ def test_consensus_genome_etl(spark, warehouse, identifiers):
     assert stats2 == stats
 
 
+def _publish_four_files(warehouse, name, rows, cluster_by):
+    """Publish *rows* (dicts) as a four-file table range-clustered on
+    *cluster_by*; return its files' inodes by basename."""
+    from id3c_spark.schemas import WAREHOUSE_SCHEMAS
+
+    schema = WAREHOUSE_SCHEMAS[name]
+    df = warehouse.spark.createDataFrame(
+        [tuple(r.get(f.name) for f in schema) for r in rows], schema
+    )
+    warehouse.tables[name].publish(df, cluster_by=cluster_by, partitions=4)
+    return _inodes(warehouse, name)
+
+
+def _inodes(warehouse, name):
+    import os
+
+    return {os.path.basename(f): os.stat(f).st_ino for f in warehouse.tables[name].files()}
+
+
+def test_kit_and_consensus_genome_reruns_carry_untouched_files(spark, warehouse, identifiers):
+    """The kit and consensus-genome ETLs upsert through the warehouse's
+    file-granular MERGE: on a clustered multi-file table, a re-run that
+    touches one key range rewrites only the files holding it and carries
+    every other file forward by hard link (same inode)."""
+    import datetime as dt
+
+    def carried(name, before):
+        after = _inodes(warehouse, name)
+        return sum(1 for b, ino in before.items() if after.get(b) == ino)
+
+    # kit: 256 kits clustered on identifier; the document's kit is one of them
+    kit_uuid = "cccccccc-0000-0000-0000-0000deadbee1"
+    kits = [{"kit_id": i, "identifier": f"cccccccc-0000-0000-0000-0000{0xdeadbe00 + i:08x}"}
+            for i in range(256)]
+    assert kit_uuid in {k["identifier"] for k in kits}
+    kit_files = _publish_four_files(warehouse, "kit", kits, ["identifier"])
+    warehouse.publish("encounter", spark.createDataFrame(
+        [(7, "enc-1", 1, 1, dt.datetime(2020, 1, 1), None, None)],
+        warehouse.read("encounter").schema,
+    ))
+    kit_doc = {"kit": "DEADBEE1", "encounter": "enc-1"}
+    kit.run(spark, receiving_df(spark, [kit_doc]), warehouse, identifiers)
+    assert carried("kit", kit_files) >= 1
+    by_id = {r.identifier: r for r in warehouse.read("kit").collect()}
+    assert len(by_id) == 256 and by_id[kit_uuid].encounter_id == 7
+
+    # consensus genome: read sets and genomes clustered on sample_id around
+    # the document's sample, sequences clustered on segment
+    warehouse.upsert_sample(spark.createDataFrame(
+        [(fixtures.SAMPLE_BARCODES["11112222"], None)],
+        "identifier string, collection_identifier string",
+    ))
+    sid = warehouse.read("sample").collect()[0].sample_id
+    near = [sid - 128 + i for i in range(256) if sid - 128 + i != sid]
+    srs_files = _publish_four_files(warehouse, "sequence_read_set", [
+        {"sequence_read_set_id": i, "sample_id": s, "urls": [f"s3://b/{i}.fq.gz"]}
+        for i, s in enumerate(near)
+    ], ["sample_id"])
+    genome_files = _publish_four_files(warehouse, "consensus_genome", [
+        {"consensus_genome_id": i, "sample_id": s, "organism_id": 2, "sequence_read_set_id": i}
+        for i, s in enumerate(near)
+    ], ["sample_id", "organism_id", "sequence_read_set_id"])
+    segments = ["ha", "m", "na", "np", "ns", "pa", "pb1", "pb2"]
+    seq_files = _publish_four_files(warehouse, "genomic_sequence", [
+        {"genomic_sequence_id": i, "identifier": f"seq-{i}", "segment": segments[i % 8],
+         "seq": "ACGT", "consensus_genome_id": i // 8}
+        for i in range(256)
+    ], ["segment", "consensus_genome_id"])
+    organisms = spark.createDataFrame(
+        ORGANISMS, "organism_id long, lineage string, identifiers map<string,string>, details string"
+    )
+    doc = {
+        "sample_identifier": fixtures.SAMPLE_BARCODES["11112222"],
+        "reference_organism": "h3n2", "status": "complete",
+        "metadata": {"urls": ["s3://b/reads1.fq.gz"]},
+        "masked_consensus": [
+            {"genomic_sequence": "ACGT", "sequence_segment": "PB2", "sequence_identifier": "seq-x"},
+        ],
+    }
+    stats = consensus_genome.run(spark, receiving_df(spark, [doc]), warehouse, organisms)
+    assert stats == {"documents": 1, "read_sets": 256, "genomes": 256, "sequences": 257}
+    assert carried("sequence_read_set", srs_files) >= 1
+    assert carried("consensus_genome", genome_files) >= 1
+    assert carried("genomic_sequence", seq_files) >= 1
+
+
 def test_sequence_read_set_upload(spark, warehouse):
     """sequence_read_set.py:81-155 parity: samples resolved through
     details.nwgc_id, unknown ids surfaced, re-upload idempotent."""

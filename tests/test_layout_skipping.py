@@ -142,10 +142,10 @@ def test_merge_publish_zorder_layout_round_trip(spark, tmp_path):
         [(0, 0, 12345, 0), (63, 63, 54321, 63 * 64 + 63)],
         "a long, b long, payload long, k long",
     )
-    full = merge(tbl.read(), updates, ["k"], "k").df.orderBy("k").collect()
+    full = merge(tbl.read(), updates, ["k"], "k").orderBy("k").collect()
     tbl.merge_publish(
         updates, ["k"],
-        lambda target: merge(target, updates, ["k"], "k").df,
+        lambda target: merge(target, updates, ["k"], "k"),
         zorder_by=["a", "b"],
     )
     assert tbl.read().orderBy("k").collect() == full

@@ -7,7 +7,7 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
-from id3c_spark.operators.merge import MultipleMatchError, find_or_create, merge
+from id3c_spark.operators.merge import MultipleMatchError, merge
 
 
 def df_of(spark, rows, schema):
@@ -36,12 +36,8 @@ def test_insert_update_skip(spark):
         key_cols=[["identifier"], ["collection_identifier"]],
         id_col="sample_id", update_cols=["collected"],
     )
-    stats = res.stats()
-    assert stats["updated"] == 1
-    assert stats["inserted"] == 1
-    assert stats["unchanged"] == 1
-
-    rows = {r.identifier: r for r in res.df.collect()}
+    rows = {r.identifier: r for r in res.collect()}
+    assert len(rows) == 3  # one updated, one unchanged, one inserted
     assert rows["s1"].collected == "2020-01-05"
     # details top-level merge, right biased
     assert json.loads(rows["s1"].details) == {"note": "old", "chip": "A1"}
@@ -63,7 +59,7 @@ def test_alternate_key_match(spark):
         key_cols=[["identifier"], ["collection_identifier"]],
         id_col="sample_id", update_cols=["collected"],
     )
-    rows = {r.sample_id: r for r in res.df.collect()}
+    rows = {r.sample_id: r for r in res.collect()}
     assert rows[2].collected == "2020-03-01"
     assert len(rows) == 2
 
@@ -95,11 +91,17 @@ def test_duplicate_update_keys_raise(spark):
               update_cols=["collected"])
 
 
-def test_find_or_create(spark):
-    target = df_of(spark, [(1, "kiosk", None)], "site_id long, identifier string, details string")
+def test_find_or_create(spark, tmp_path):
+    """find_or_create_* parity (etl/__init__.py:33-63): insert missing
+    keys, never update existing rows."""
+    from id3c_spark.etl.warehouse import Warehouse
+
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    wh.publish("site", df_of(
+        spark, [(1, "kiosk", None)], "site_id long, identifier string, details string"
+    ))
     wanted = df_of(spark, [("kiosk",), ("clinic",)], "identifier string")
-    res = find_or_create(target, wanted, ["identifier"], "site_id")
-    rows = {r.identifier: r for r in res.df.collect()}
+    rows = {r.identifier: r for r in wh.find_or_create_site(wanted).collect()}
     assert set(rows) == {"kiosk", "clinic"}
     assert rows["kiosk"].site_id == 1  # existing row untouched
 
@@ -141,11 +143,7 @@ def test_single_pass_merge_matches_staged(spark):
             key=lambda t: tuple((x is None, x) for x in t),
         )
 
-    assert norm(fast.df.collect()) == norm(slow.df.collect())
-    for attr in ("updated_df", "inserted_df", "unchanged_df"):
-        fa = norm(getattr(fast, attr).collect())
-        sa = norm(getattr(slow, attr).collect())
-        assert fa == sa, attr
+    assert norm(fast.collect()) == norm(slow.collect())
 
 
 def test_deterministic_insert_ids(spark):
@@ -154,6 +152,6 @@ def test_deterministic_insert_ids(spark):
     updates = df_of(spark, [
         (None, "s1", None, "2020-01-01", None),
     ], SAMPLE_SCHEMA).drop("sample_id")
-    id1 = merge(target, updates, [["identifier"]], "sample_id").df.collect()[0].sample_id
-    id2 = merge(target, updates, [["identifier"]], "sample_id").df.collect()[0].sample_id
+    id1 = merge(target, updates, [["identifier"]], "sample_id").collect()[0].sample_id
+    id2 = merge(target, updates, [["identifier"]], "sample_id").collect()[0].sample_id
     assert id1 == id2

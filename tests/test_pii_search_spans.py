@@ -96,6 +96,28 @@ def test_bm25_matches_bruteforce(spark):
     ]
 
 
+def test_bm25_score_on_rounding_half_matches_oracle(spark):
+    """Doc 1's exact 8-dp term-score sum is 2.05472750, a 6-dp rounding
+    half. The double nearest to it lies just below the half, so the
+    catalog's DuckDB oracle rounds it down to 2.054727; the engine must
+    round the same double the same way (not half-up on its decimal
+    string, which gives 2.054728)."""
+    import duckdb
+    import pandas as pd
+
+    from id3c_spark.operators.search import bm25_topk
+    from id3c_spark.plans.queries import _BM25_TERMS, ORACLES
+
+    docs = [(0, "merge scan spark"), (1, "window join row join join row"), (2, "spark")]
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(docs, columns=["doc_id", "text"]))
+    want = {r[0]: r[1] for r in con.sql(ORACLES["bm25_search_docs"]).fetchall()}
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    got = {r.doc_id: r.score for r in bm25_topk(df, _BM25_TERMS, k=10).collect()}
+    assert want[1] == 2.054727
+    assert got == want
+
+
 # ---------------------------------------------------------------------------
 # Shared spans
 # ---------------------------------------------------------------------------

@@ -14,7 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from id3c_spark.operators.merge import merge
-from id3c_spark.sources.store import ParquetTable
+from id3c_spark.sources.store import MERGE_KEY_CAP, ParquetTable, footer_range
 
 
 def _clustered_publish(spark, tbl, n=100, files=4):
@@ -39,11 +39,11 @@ def test_cow_merge_rewrites_only_touched_files(spark, tmp_path):
         [(5, 999, None), (10, 888, None), (200, 1, None)],
         "k long, val long, details string",
     )
-    full = merge(tbl.read(), updates, ["k"], "k").df.orderBy("k").collect()
+    full = merge(tbl.read(), updates, ["k"], "k").orderBy("k").collect()
 
     tbl.merge_publish(
         updates, ["k"],
-        lambda target: merge(target, updates, ["k"], "k").df,
+        lambda target: merge(target, updates, ["k"], "k"),
         cluster_by=["k"],
     )
 
@@ -67,13 +67,46 @@ def test_cow_merge_insert_only_batch_carries_everything(spark, tmp_path):
     )
     tbl.merge_publish(
         updates, ["k"],
-        lambda target: merge(target, updates, ["k"], "k").df,
+        lambda target: merge(target, updates, ["k"], "k"),
     )
     after = {os.path.basename(f): os.stat(f).st_ino for f in tbl.files()}
     # Every pre-existing file carried untouched; only insert files are new.
     assert all(after.get(b) == ino for b, ino in before.items())
     assert tbl.read().count() == 102
     assert tbl.read().filter("k = 500").select("val").collect()[0][0] == 1
+
+
+def test_cow_merge_past_key_cap_prunes_by_key_range(spark, tmp_path):
+    # A batch with more than MERGE_KEY_CAP distinct keys prunes by its
+    # key range instead of per value: files wholly above the range still
+    # carry forward by inode, and the result is the full-table merge.
+    tbl = ParquetTable(spark, str(tmp_path / "t"), keep_versions=10)
+    _clustered_publish(spark, tbl, n=3 * MERGE_KEY_CAP, files=3)
+    before = {os.path.basename(f): os.stat(f).st_ino for f in tbl.files()}
+
+    # keys 1..cap+1 exist (val becomes -1); cap+1 distinct keys > the cap
+    hi = MERGE_KEY_CAP + 1
+    updates = spark.range(1, hi + 1).select(
+        F.col("id").alias("k"),
+        F.lit(-1).cast("long").alias("val"),
+        F.lit(None).cast("string").alias("details"),
+    )
+    full = merge(tbl.read(), updates, ["k"], "k")
+    untouched = [
+        os.path.basename(f) for f in tbl.files() if footer_range(f, "k")[0] > hi
+    ]
+    assert untouched  # the layout leaves a file wholly above the batch
+
+    tbl.merge_publish(
+        updates, ["k"],
+        lambda target: merge(target, updates, ["k"], "k"),
+        cluster_by=["k"],
+    )
+    after = {os.path.basename(f): os.stat(f).st_ino for f in tbl.files()}
+    assert all(after.get(b) == before[b] for b in untouched)
+    got = tbl.read()
+    assert got.count() == full.count() == 3 * MERGE_KEY_CAP
+    assert got.exceptAll(full).isEmpty() and full.exceptAll(got).isEmpty()
 
 
 def test_cow_merge_alternate_keys_prune_on_each(spark, tmp_path):
@@ -94,10 +127,10 @@ def test_cow_merge_alternate_keys_prune_on_each(spark, tmp_path):
     keys = [["identifier"], ["collection_identifier"]]
     full = merge(
         tbl.read(), updates, keys, "sample_id", update_cols=["collection_identifier"]
-    ).df.orderBy("sample_id").collect()
+    ).orderBy("sample_id").collect()
     tbl.merge_publish(
         updates, keys,
-        lambda t: merge(t, updates, keys, "sample_id", update_cols=["collection_identifier"]).df,
+        lambda t: merge(t, updates, keys, "sample_id", update_cols=["collection_identifier"]),
     )
     assert tbl.read().orderBy("sample_id").collect() == full
     got = tbl.read().filter("collection_identifier = 'coll005'").collect()
@@ -184,7 +217,7 @@ def test_changes_cdc_is_file_granular(spark, tmp_path):
     )
     v2 = tbl.merge_publish(
         updates, ["k"],
-        lambda target: merge(target, updates, ["k"], "k").df,
+        lambda target: merge(target, updates, ["k"], "k"),
         cluster_by=["k"],
     )
 
@@ -236,7 +269,7 @@ def test_changes_cdc_reconstructs_next_version(spark, tmp_path):
     )
     v2 = tbl.merge_publish(
         updates, ["k"],
-        lambda target: merge(target, updates, ["k"], "k").df,
+        lambda target: merge(target, updates, ["k"], "k"),
         cluster_by=["k"],
     )
     feed = tbl.changes(v1, v2)

@@ -18,8 +18,10 @@ import shutil
 import sys
 import tempfile
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from id3c_spark.session import get_spark
 from tools.ann_recall import recall, topk_sets

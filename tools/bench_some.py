@@ -8,8 +8,10 @@ import json
 import os
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from id3c_spark.plans.queries import all_queries
 from id3c_spark.session import get_spark

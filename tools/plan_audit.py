@@ -12,8 +12,10 @@ most expensive + newest queries.
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from id3c_spark.plans.queries import all_queries
 from id3c_spark.session import get_spark

@@ -15,8 +15,10 @@ from __future__ import annotations
 import json
 import subprocess
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 
 def run_bench(sf_dir: str) -> dict:
@@ -26,7 +28,7 @@ def run_bench(sf_dir: str) -> dict:
         capture_output=True,
         text=True,
         timeout=1800,
-        cwd="/root/repo",
+        cwd=ROOT,
     )
     return json.loads(out.stdout.strip().splitlines()[-1])
 
@@ -41,7 +43,7 @@ def main() -> int:
     import re
 
     latest = max(
-        glob.glob("/root/repo/BENCH_LOCAL_r*.json"),
+        glob.glob(str(ROOT / "BENCH_LOCAL_r*.json")),
         key=lambda p: int(re.search(r"r(\d+)", p).group(1)),
     )
     big = json.load(open(latest))["median_queries"]
